@@ -206,5 +206,9 @@ def gather_rate(workers: int, mb: int = 256) -> float:
 
 
 def gather_ceiling(n: int) -> float:
-    """Machine's own N->4N scaling for latency-bound random access."""
-    return round(gather_rate(4 * n) / (4 * gather_rate(n)), 3)
+    """Machine's own N->4N scaling for latency-bound random access
+    (0.0 when the N-worker leg measured no gathers at all)."""
+    base = gather_rate(n)
+    if base <= 0:
+        return 0.0
+    return round(gather_rate(4 * n) / (4 * base), 3)

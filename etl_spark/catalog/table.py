@@ -16,14 +16,14 @@ Storage model
   set intersects the batch's touched buckets; everything else is carried
   forward by reference in the manifest.
 
-Merge strategies (auto-selected per batch)
-------------------------------------------
-- ``broadcast`` (delta small — the steady-state CDC case): the touched
-  slice is LEFT-joined against the broadcast delta (NO shuffle of the
-  big side; one full scan + one key-column-only scan), new keys appended.
-- ``shuffle`` (delta large — backfills/initial load): target slice and
-  delta are unioned as pseudo-events and reduced with one ``max_by``
-  hash aggregation (map-side partial agg collapses hot keys pre-shuffle).
+One rewrite path
+----------------
+Every bucket-clustered write — the copy-on-write merge, a big
+merge-on-read delta, and compaction (targeted or rescale) — goes through
+``_write_buckets``: the union of the rows to rewrite is placed one
+(bucket, file slice) group per shuffle partition, LWW-deduped by key
+inside that partition (no second shuffle), and written
+``partitionBy("bucket")``.
 
 Scale notes (100 TB / 1000 executors): the only per-batch driver state is
 the manifest (file entries) and the watermark vector.  Steady-state file
@@ -59,6 +59,22 @@ ENVELOPE_COLUMNS = {"seq", "part_id", "op", "ts", "extra"}
 SYSTEM = {"_ingest_seq", "_batch_id", "_deleted", "bucket"}
 
 
+def _lww_order() -> list:
+    """LWW winner order within one key: highest ``_ingest_seq`` first,
+    and on a seq tie the earliest-applied batch (idempotent
+    re-delivery keeps the row already in the table)."""
+    return [F.desc("_ingest_seq"), F.asc("_batch_id")]
+
+
+def _add_file_bytes(by_bucket: dict[int, int], entries: list[FileEntry]) -> None:
+    """Add each file's on-disk bytes to its buckets (a multi-bucket file
+    splits its bytes evenly)."""
+    for e in entries:
+        share = e.bytes // max(1, len(e.buckets))
+        for b in e.buckets:
+            by_bucket[b] = by_bucket.get(b, 0) + share
+
+
 def _apply_props(props: dict, updates: dict | None) -> None:
     """Apply a set_properties dict: a None value DELETES the key (used by
     the streaming sink to atomically retire a predecessor checkpoint's
@@ -87,8 +103,6 @@ class LakeTable:
         n_buckets: int = 16,
         salt: int = 8,
         hot_repos: list[str] | None = None,
-        broadcast_threshold_rows: int = 2_000_000,
-        broadcast_threshold_bytes: int = 64 << 20,
         hot_frac: float = 0.30,
         hot_min_rows: int = 10_000,
         repo_stats_topk: int = 200,
@@ -117,8 +131,6 @@ class LakeTable:
             salt=salt,
             hot_repos=list(hot_repos or []),
             properties={
-                "broadcast_threshold_rows": str(broadcast_threshold_rows),
-                "broadcast_threshold_bytes": str(broadcast_threshold_bytes),
                 "hot_frac": str(hot_frac),
                 "hot_min_rows": str(hot_min_rows),
                 "repo_stats_topk": str(repo_stats_topk),
@@ -263,19 +275,17 @@ class LakeTable:
         snap: Snapshot,
         base_entries: list[FileEntry],
         delta_entries: list[FileEntry],
-        delta_filter=None,
     ) -> DataFrame:
         """Effective table rows (incl. tombstones) under merge-on-read:
         base rows are unique per key; pending delta files may hold newer
         versions — one LWW window by key over (_ingest_seq DESC,
-        _batch_id ASC) resolves them.  The ASC tie-break mirrors the
-        copy-on-write merges, which keep the TARGET row on equal seq
-        (idempotent re-delivery): the earliest-applied batch wins a seq
-        tie everywhere, so MoR reads, CoW merges, and compaction share
-        ONE LWW semantics even if a producer ever emitted distinct
-        payloads under one seq (ADVICE r3).  With no pending deltas this
-        is a plain scan (zero extra shuffle — the copy-on-write fast
-        path).
+        _batch_id ASC) resolves them.  The ASC tie-break keeps the
+        earliest-applied batch on equal seq (idempotent re-delivery);
+        ``_write_buckets`` uses the same order, so MoR reads, CoW merges,
+        and compaction share ONE LWW semantics even if a producer ever
+        emitted distinct payloads under one seq (ADVICE r3).  With no
+        pending deltas this is a plain scan (zero extra shuffle — the
+        copy-on-write fast path).
 
         Scale: the window runs ONLY over base files in delta-touched
         buckets; every other base file bypasses it as a plain scan
@@ -290,18 +300,8 @@ class LakeTable:
         untouched = [
             e for e in base_entries if not (set(e.buckets) & delta_buckets)
         ]
-        dread = self._read_files(snap, delta_entries)
-        if delta_filter is not None:
-            # targeted compaction folds only the selected buckets' delta
-            # rows out of a multi-bucket delta file; the caller rewrites
-            # the remainder as a leftover delta (bucket is derivable from
-            # repo + the snapshot layout, so the filter is a data-column
-            # expression — no layout assumption on the file)
-            dread = dread.filter(delta_filter)
-        u = self._read_files(snap, touched).unionByName(dread)
-        w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-            F.desc("_ingest_seq"), F.asc("_batch_id")
-        )
+        u = self._read_files(snap, touched + delta_entries)
+        w = Window.partitionBy(*KEY_COLUMNS).orderBy(*_lww_order())
         resolved = (
             u.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -367,11 +367,9 @@ class LakeTable:
         batch_df: DataFrame,
         batch_id: int,
         delivery: str = "ordered",
-        strategy: str = "auto",
         canonicalizer=None,
         mode: str | None = None,
         set_properties: dict[str, str] | None = None,
-        expected_rows: int | None = None,
     ) -> dict:
         """Exactly-once merge of one micro-batch.
 
@@ -398,16 +396,13 @@ class LakeTable:
                                ``mor_min_amplification`` × delta keys);
                                None reads the table property
                                ``write_mode``.
-        expected_rows        — accepted for caller compatibility; no
-                               longer drives any behavior.  An earlier
-                               build used it to overlap the stats job on
-                               a background thread; the resulting
-                               CONCURRENT AQE SQL executions hit a
-                               lost-stage-event race in Spark's
-                               AdaptiveSparkPlanExec (the stream hung
-                               forever in withFinalPlanUpdate with an
-                               idle JVM), so every per-batch job now
-                               runs on the single foreachBatch chain.
+
+        Copy-on-write rewrites the touched buckets' base files, their
+        pending delta files and the batch's rows in ONE pass through
+        ``_write_buckets``; merge-on-read writes the batch's rows as a
+        delta file (one multi-bucket file when small, else through the
+        same writer).  Every per-batch Spark job runs on the single
+        foreachBatch chain (see the AQE-race note in ``_apply_inner``).
         Returns a stats dict (also the metrics-table rows' source).
         """
         t0 = time.monotonic()
@@ -439,8 +434,8 @@ class LakeTable:
         stage_dir = os.path.join(self.root, stage_rel)
         try:
             return self._apply_inner(
-                d0, d, batch_id, snap, strategy, t0, stage_dir, canonicalizer,
-                mode, set_properties, expected_rows,
+                d0, d, batch_id, snap, t0, stage_dir, canonicalizer,
+                mode, set_properties,
             )
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
@@ -451,20 +446,19 @@ class LakeTable:
         d,
         batch_id,
         snap,
-        strategy,
         t0,
         stage_dir,
         canonicalizer=None,
         mode=None,
         set_properties=None,
-        expected_rows=None,
     ) -> dict:
         phases: dict[str, float] = {}
+        clock = [t0]
 
-        def mark(name: str, since: float) -> float:
+        def mark(name: str) -> None:
             now = time.monotonic()
-            phases[name] = round(now - since, 3)
-            return now
+            phases[name] = round(now - clock[0], 3)
+            clock[0] = now
 
         # -- lineage + watermark + hot-repo stats in ONE aggregation pass
         # (grouping sets: by part_id for the watermark vector / metrics,
@@ -559,7 +553,7 @@ class LakeTable:
         repo_rows = [r for r in rows if r["part_id"] is None]
         batch_wm = {int(r["part_id"]): int(r["end_seq"]) for r in part_rows}
         n_events = sum(int(r["rows_applied"]) for r in part_rows)
-        tp = mark("stats_job", t0)
+        mark("stats_job")
 
         if n_events == 0:
             # all-duplicate batch: still commit the fence so replay skips it
@@ -611,10 +605,7 @@ class LakeTable:
             # separate-histogram job as the exact fallback.
             bucket_ids = self._bucket_id_space(new_snap)
             to_write = d
-            if (
-                len(bucket_ids) <= 64
-                and os.environ.get("ETL_SPARK_WRITE_OBSERVE", "1") != "0"
-            ):
+            if len(bucket_ids) <= 64:
                 from pyspark.sql import Observation
 
                 per_row = self._row_bytes_expr(d)
@@ -641,7 +632,7 @@ class LakeTable:
             to_write.write.mode("overwrite").parquet(stage_dir)
             staged = self.spark.read.parquet(stage_dir)
         d = canonicalizer(staged) if canonicalizer is not None else staged
-        tp = mark("stage_delta", tp)
+        mark("stage_delta")
         if stage_obs is not None:
             vals = stage_obs.get
             bucket_rows = [
@@ -654,7 +645,7 @@ class LakeTable:
             bucket_rows = self._bucket_histogram(staged, bucket)
         touched = {int(r["bucket"]) for r in bucket_rows} | migrate_buckets
         delta_bytes = sum(int(r["bytes"] or 0) for r in bucket_rows)
-        tp = mark("bucket_job", tp)
+        mark("bucket_job")
 
         # bucket-set CLOSURE over pending deltas: a delta file may span
         # buckets beyond this batch's touched set (small deltas are
@@ -734,66 +725,7 @@ class LakeTable:
             )
         )
 
-        if strategy == "auto":
-            thr = int(snap.properties.get("broadcast_threshold_rows", "2000000"))
-            thr_bytes = int(
-                snap.properties.get("broadcast_threshold_bytes", str(64 << 20))
-            )
-            # broadcasting the delta ships it through the driver once —
-            # only sane when the payload is genuinely small
-            strategy = (
-                "broadcast"
-                if d_count <= thr and delta_bytes <= thr_bytes
-                else "shuffle"
-            )
-
         delta_rows = self._to_table_rows(d, batch_id, all_cols)
-        bexpr = bucket  # same key->bucket resolution as the histogram above
-        # bucket-cluster EVERY output file: hash-repartition on bucket
-        # (no range-sampler job), then write partitionBy("bucket") so a
-        # data file belongs to EXACTLY one bucket by construction — the
-        # manifest needs no stats guessing and CoW pruning stays exact.
-        # This includes the broadcast-path survivors: skipping their
-        # shuffle was measured cheap, but it let file scans mix buckets
-        # across source files, progressively widening every file's
-        # claimed bucket span.
-        # bounded file sizes: a fat bucket must never become one enormous
-        # data file (at 10^10-event scale a bucket can be 100s of GB; a
-        # single file per bucket would defeat scan parallelism limits,
-        # retries, and object-store sanity).  Fat buckets split into
-        # path-hash slices of ~max_file_bytes each — still one BUCKET per
-        # file (partitionBy below), just several files per fat bucket.
-        max_fb = int(snap.properties.get("max_file_bytes", str(512 << 20)))
-        bytes_by_bucket: dict[int, int] = {}
-        for r in bucket_rows:  # delta contribution (uncompressed estimate
-            # — conservative: overestimates slice counts, never under)
-            bytes_by_bucket[int(r["bucket"])] = (
-                bytes_by_bucket.get(int(r["bucket"]), 0) + int(r["bytes"] or 0)
-            )
-        if not use_mor:
-            for e in slice_base + slice_delta:
-                share = e.bytes // max(1, len(e.buckets))
-                for b in e.buckets:
-                    bytes_by_bucket[b] = bytes_by_bucket.get(b, 0) + share
-        # writer parallelism floor: a rewrite touching fewer buckets than
-        # the cluster has cores runs under-parallel; slice the largest
-        # buckets further (>=16MB per slice) so the write stage can use
-        # the machine.  Disabled on promotion batches (rows can leave the
-        # touched set mid-rehash, so exact group enumeration is off).
-        min_par = 0 if promoted else self.spark.sparkContext.defaultParallelism
-        slice_expr, extra_parts, slice_ks = self._file_slice_expr(
-            bytes_by_bucket, max_fb, min_parallel=min_par
-        )
-        npart = max(1, min(len(touched) + extra_parts, 2048))
-        # collision-free (bucket, slice) -> partition placement: even
-        # writer waves + the single-shuffle fused merge below.  Promotion
-        # batches fall back to hash partitioning (same gate as above).
-        tok_expr, tok_npart = (
-            self._placement_expr(sorted(touched), slice_ks)
-            if not promoted and os.environ.get("ETL_SPARK_EXACT_PLACEMENT", "1") != "0"
-            else (None, 0)
-        )
-        new_entries = None
         # Small merge-on-read deltas are written as ONE multi-bucket file
         # instead of one file per touched bucket: a 10k-row steady-state
         # micro-batch whose keys spread over every bucket would otherwise
@@ -808,140 +740,40 @@ class LakeTable:
         small_delta_bytes = int(
             snap.properties.get("mor_small_delta_bytes", str(64 << 20))
         )
-        fused = None
-        if use_mor and delta_bytes <= small_delta_bytes and not migrate_buckets:
-            strategy = "mor-delta"
-            rel_dir = os.path.join(
-                "data", f"d{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
+        rel_dir = os.path.join(
+            "data",
+            f"{'d' if use_mor else 'b'}{batch_id:08d}-{uuid.uuid4().hex[:8]}",
+        )
+        if use_mor and delta_bytes <= small_delta_bytes:
             new_entries = self._write_delta_single(
-                delta_rows, rel_dir, sorted(batch_buckets), bexpr
+                delta_rows, rel_dir, sorted(batch_buckets), bucket
             )
-            tp = mark("merge_write", tp)
-            tp = mark("scan_written", tp)
-        elif use_mor:
-            strategy = "mor-delta"
-            merged = delta_rows
-            rel_dir = os.path.join(
-                "data", f"d{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
+            mark("merge_write")
+            mark("scan_written")
         else:
-            # copy-on-write: the touched slice (base files PLUS any
-            # pending delta files in those buckets, LWW-pre-resolved so
-            # the merge sees one row per key) is rewritten
-            slice_df = (
-                self._resolve(snap, slice_base, slice_delta)
-                if (slice_base or slice_delta)
-                else None
+            # output bytes per bucket drive the file slicing: the delta's
+            # uncompressed estimate (conservative: overestimates slice
+            # counts, never under) plus, for copy-on-write, the slice
+            # files' on-disk bytes
+            out_buckets = batch_buckets if use_mor else touched
+            bytes_by_bucket = {b: 0 for b in out_buckets}
+            for r in bucket_rows:
+                bytes_by_bucket[int(r["bucket"])] += int(r["bytes"] or 0)
+            rows = delta_rows
+            if not use_mor and (slice_base or slice_delta):
+                # copy-on-write: the touched buckets' base files, their
+                # pending delta files and the batch's rows, in one union;
+                # the writer's LWW keeps one row per key
+                _add_file_bytes(bytes_by_bucket, slice_base + slice_delta)
+                rows = self._read_files(
+                    snap, slice_base + slice_delta
+                ).unionByName(delta_rows, allowMissingColumns=True)
+            # promotion batches hash-place: the promoted repo's rows leave
+            # the touched set mid-rehash, so exact groups can't be named
+            new_entries = self._write_buckets(
+                new_snap, rows, rel_dir, bytes_by_bucket,
+                exact=not promoted, mark=mark,
             )
-            if slice_df is None:
-                merged = delta_rows
-            elif strategy == "broadcast":
-                resolved, news = self._merge_broadcast(
-                    slice_df, staged, delta_rows, all_cols, batch_id
-                )
-                merged = resolved.unionByName(news)
-            elif (
-                tok_expr is not None
-                and os.environ.get("ETL_SPARK_FUSED_MERGE", "1") != "0"
-            ):
-                # single-shuffle LWW merge: dedup runs under the writer's
-                # own (bucket, slice) partitioning instead of a separate
-                # key-hash shuffle + second sort (see _merge_fused)
-                strategy = "shuffle-fused"
-                fused = self._merge_fused(
-                    slice_df, delta_rows, all_cols, bexpr, slice_expr,
-                    tok_expr, tok_npart,
-                )
-            else:
-                merged = self._merge_shuffle(slice_df, delta_rows, all_cols)
-            rel_dir = os.path.join(
-                "data", f"b{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
-
-        if new_entries is None:
-            if fused is not None:
-                # _merge_fused output is already exact-placed, key-sorted
-                # within single-(bucket, slice) partitions, and deduped —
-                # the write consumes it directly (no second shuffle/sort)
-                merged = fused
-            else:
-                merged = merged.withColumn("bucket", bexpr).withColumn(
-                    "_slice", slice_expr
-                )
-                if tok_expr is not None:
-                    # exact placement even for non-fused shapes
-                    # (broadcast-merge output, big-MoR deltas): one
-                    # (bucket, slice) group per partition — even waves
-                    merged = (
-                        merged.withColumn("_tok", tok_expr)
-                        .repartition(tok_npart, "_tok")
-                        .drop("_tok")
-                    )
-                else:
-                    merged = merged.repartition(npart, "bucket", "_slice")
-                merged = merged.sortWithinPartitions("repo", "path").drop(
-                    "_slice"
-                )
-
-            # -- write new data files --------------------------------------
-            # Manifest stats are observed DURING the write job (one pass
-            # over the data, VERDICT r4 #3): per-touched-bucket conditional
-            # aggregates ride the write plan via ``observe`` and, because
-            # the no-slice layout writes exactly one file per non-empty
-            # bucket (each (bucket, slice=0) group lands in one shuffle
-            # partition; partitionBy splits a task's rows per bucket), they
-            # map 1:1 onto output files.  Gated off — falling back to the
-            # column-pruned post-write scan — when the mapping can break:
-            # file slices (extra_parts > 0), hot-repo promotion (output
-            # buckets leave the touched set mid-rehash), or a touched set
-            # wide enough that the conditional-agg expression tree would
-            # bloat codegen (backfills, where a second scan is noise
-            # anyway).
-            obs = None
-            obs_buckets = sorted(touched)
-            # ETL_SPARK_WRITE_OBSERVE=0: diagnostic kill-switch for the
-            # observe-stats ride-along (falls back to the post-write
-            # scan) — used to attribute merge-phase cost during profiling
-            if (
-                extra_parts == 0
-                and not promoted
-                and len(obs_buckets) <= 64
-                and os.environ.get("ETL_SPARK_WRITE_OBSERVE", "1") != "0"
-            ):
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                aggs = []
-                for b in obs_buckets:
-                    w = F.col("bucket") == b
-                    aggs += [
-                        F.sum(F.when(w, 1).otherwise(0)).alias(f"rows_{b}"),
-                        F.sum(
-                            F.when(w & ~F.col("_deleted"), 1).otherwise(0)
-                        ).alias(f"live_{b}"),
-                        F.min(F.when(w, F.col("repo"))).alias(f"min_{b}"),
-                        F.max(F.when(w, F.col("repo"))).alias(f"max_{b}"),
-                    ]
-                merged = merged.observe(obs, *aggs)
-            out_dir = os.path.join(self.root, rel_dir)
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-            tp = mark("merge_write", tp)
-            if obs is not None:
-                vals = obs.get
-                per_bucket = {
-                    b: {
-                        "rows": int(vals[f"rows_{b}"] or 0),
-                        "live": int(vals[f"live_{b}"] or 0),
-                        "min_repo": vals[f"min_{b}"],
-                        "max_repo": vals[f"max_{b}"],
-                    }
-                    for b in obs_buckets
-                }
-                new_entries = self._entries_from_stats(rel_dir, per_bucket)
-            if new_entries is None:
-                new_entries = self._scan_written(rel_dir)
-            tp = mark("scan_written", tp)
 
         # -- commit ---------------------------------------------------------
         if use_mor:
@@ -966,7 +798,7 @@ class LakeTable:
         # batch without lineage
         latency_ms = self._write_metrics(batch_id, part_rows, t0)
         self.log.commit(new_snap, expect_parent=snap.version)
-        mark("commit", tp)
+        mark("commit")
 
         # delta-debt control: when pending MoR rows exceed the configured
         # fraction of base rows (read-merge volume) or the delta FILE
@@ -1006,7 +838,6 @@ class LakeTable:
             "events": n_events,
             "repo_stat_rows": len(repo_rows),
             "delta_keys": d_count,
-            "strategy": strategy,
             "mode": "mor" if use_mor else "cow",
             "touched_buckets": sorted(touched),
             "rewrote_files": 0 if use_mor else len(slice_base),
@@ -1023,7 +854,7 @@ class LakeTable:
         }
 
     # ------------------------------------------------------------------ #
-    # merge strategies
+    # the bucket writer
     # ------------------------------------------------------------------ #
     def _to_table_rows(self, d: DataFrame, batch_id: int, all_cols: list[str]) -> DataFrame:
         is_del = F.col("op") == "delete"
@@ -1043,45 +874,6 @@ class LakeTable:
                 out = out.withColumn(c, F.lit(None).cast("string"))
         return out.select(*all_cols)
 
-    def _merge_broadcast(
-        self, slice_df: DataFrame, d: DataFrame, delta_rows: DataFrame,
-        all_cols: list[str], batch_id: int,
-    ) -> DataFrame:
-        """Steady-state path: NO shuffle of the target slice.
-
-        1. slice LEFT JOIN broadcast(delta-rows)  -> survivors + in-place
-           winners (delta wins iff strictly higher seq; ties keep target —
-           idempotent re-delivery).
-        2. key-column-only scan of the slice semi-joined to delta ->
-           matched keys (small) -> anti-join gives brand-new keys.
-        """
-        tgt = slice_df
-        for c in all_cols:
-            if c not in tgt.columns:
-                tgt = tgt.withColumn(c, F.lit(None).cast("string"))
-        dr = delta_rows.select(
-            *KEY_COLUMNS,
-            *[F.col(c).alias(f"_d_{c}") for c in all_cols if c not in KEY_COLUMNS],
-        )
-        joined = tgt.join(F.broadcast(dr), KEY_COLUMNS, "left")
-        take = F.col("_d__ingest_seq").isNotNull() & (
-            F.col("_d__ingest_seq") > F.col("_ingest_seq")
-        )
-        resolved = joined.select(
-            *KEY_COLUMNS,
-            *[
-                F.when(take, F.col(f"_d_{c}")).otherwise(F.col(c)).alias(c)
-                for c in all_cols
-                if c not in KEY_COLUMNS
-            ],
-        )
-
-        matched = slice_df.select(*KEY_COLUMNS).join(
-            F.broadcast(d.select(*KEY_COLUMNS)), KEY_COLUMNS, "left_semi"
-        )
-        news = delta_rows.join(F.broadcast(matched), KEY_COLUMNS, "left_anti")
-        return resolved, news
-
     @staticmethod
     def _placement_expr(buckets: list[int], ks: dict[int, int]):
         """Exact shuffle-partition placement for the writer stage.
@@ -1095,7 +887,7 @@ class LakeTable:
         8-core scaling leg (uneven write waves) while 2 cores ran
         saturated.  ``placement_tokens`` inverts Spark's hash so the
         repartition lands exactly one group per partition: even waves,
-        every file written by its own task, and the fused merge's window
+        every file written by its own task, and the writer's LWW window
         sees one (bucket, slice) group per partition."""
         from etl_spark.functions.murmur import placement_tokens
 
@@ -1112,92 +904,111 @@ class LakeTable:
         )
         return F.element_at(F.create_map(*kv), key).cast("int"), len(pairs)
 
-    def _merge_fused(
+    def _write_buckets(
         self,
-        slice_df: DataFrame,
-        delta_rows: DataFrame,
-        all_cols: list[str],
-        bexpr,
-        slice_expr,
-        tok_expr,
-        npart: int,
-    ) -> DataFrame:
-        """Single-shuffle copy-on-write merge (backfill path).
+        snap: Snapshot,
+        rows: DataFrame,
+        rel_dir: str,
+        bytes_by_bucket: dict[int, int],
+        exact: bool = True,
+        mark=lambda _phase: None,
+    ) -> list[FileEntry]:
+        """The one bucket-clustered rewrite: the copy-on-write merge, big
+        merge-on-read deltas and compaction all write through here.
 
-        ``_merge_shuffle`` + the writer relayout cost TWO full shuffles
-        and two sorts of the merged slice: a key-hash shuffle for the
-        LWW window, then ``repartition(bucket, _slice)`` + a second sort
-        for the bucket-clustered write.  But bucket and slice are pure
-        functions of the key columns, so rows of one key already
-        co-locate under the WRITER'S partitioning — the LWW can run
-        there: union -> one exact-placed repartition on the
-        (bucket, slice) token -> per-partition sort by (key, _ingest_seq
-        DESC, _src DESC) -> keep each key run's FIRST row (window lag
-        over the same sort: zero extra exchange, zero extra sort).
-        Winner semantics are identical to ``_merge_shuffle`` (highest
-        seq; seq tie keeps the target row — idempotent re-delivery), and
-        the surviving rows leave sorted by key within single-group
-        partitions, which is exactly the layout the write wants.
-        Measured (8-core leg, 1.2M-event batch): 24.5s -> 9.9s for the
-        merge+layout stage; the 2-core leg moves 19.6s -> 17.1s, so the
-        fusion directly lifts N->4N scaling efficiency, not just
-        absolute throughput.  Window buffers hold one (bucket, slice)
-        group (~max_file_bytes worst case); spill thresholds sized in
-        config.spark_conf."""
-        from pyspark.sql import Window
+        ``rows`` is the union of everything to rewrite and may hold
+        several versions of a key; ``bytes_by_bucket`` names every output
+        bucket under ``snap``'s layout with its estimated bytes.  Every
+        data file belongs to exactly one bucket by construction, so CoW
+        pruning stays exact; fat buckets split into ~``max_file_bytes``
+        path-hash slices, and with exact placement a narrow rewrite is
+        sliced further up to the core count (``_file_slice_expr``).
 
-        t = slice_df.withColumn("_src", F.lit(1))
-        dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd, allowMissingColumns=True)
-        for c in all_cols:
-            if c not in u.columns:
-                u = u.withColumn(c, F.lit(None).cast("string"))
-        u = (
-            u.withColumn("bucket", bexpr)
-            .withColumn("_slice", slice_expr)
-            .withColumn("_tok", tok_expr)
-            .repartition(npart, "_tok")
-        )
-        w = Window.partitionBy("_tok").orderBy(
-            *KEY_COLUMNS, F.desc("_ingest_seq"), F.desc("_src")
-        )
-        lags = [
-            F.lag(c).over(w).eqNullSafe(F.col(c)) for c in KEY_COLUMNS
-        ]
-        same_key = lags[0]
-        for lg in lags[1:]:
-            same_key = same_key & lg
-        return (
-            u.withColumn("_rn", F.row_number().over(w))
-            .withColumn("_same", same_key)
-            .filter((F.col("_rn") == 1) | ~F.col("_same"))
-            .select(*all_cols, "bucket")
-        )
+        1. Place: every (bucket, file slice) group gets its own shuffle
+           partition (``_placement_expr``).  Without exact placement —
+           ``exact=False`` (hot-repo promotion) or more than 2048 groups
+           — rows hash-repartition on (bucket, slice) instead.
+        2. Dedup: bucket and slice are pure functions of the key, so
+           every version of a key lands in one partition, and one
+           row_number window by key over (_ingest_seq DESC, _batch_id
+           ASC) keeps the winner under the same exchange — no second
+           shuffle, and input already unique per key passes through.
+           The window's sort leads with ``bucket``, the order
+           ``partitionBy`` needs, so the write adds no sort of its own.
+           Measured (8-core leg, 1.2M-event batch) against the old
+           key-shuffle merge plus writer relayout: 24.5s -> 9.9s.
+        3. Write ``partitionBy("bucket")``.  When every bucket is one
+           file (no slices, exact placement, <= 64 buckets so the
+           conditional aggregates stay codegen-sized) the manifest stats
+           ride the write as ``observe`` aggregates; otherwise, or when
+           the written layout is not the predicted one, the post-write
+           scan builds the entries."""
+        from pyspark.sql import Observation, Window
 
-    def _merge_shuffle(
-        self, slice_df: DataFrame, delta_rows: DataFrame, all_cols: list[str]
-    ) -> DataFrame:
-        """Backfill path: window LWW over target ∪ delta — one shuffle by
-        key, sort-based (no per-key row-struct buffering: a max_by
-        hash-agg was measured to anti-scale on wide rows at high core
-        counts).  Order key (_ingest_seq DESC, _src DESC) keeps the
-        target row on seq ties (idempotent re-delivery)."""
-        from pyspark.sql import Window
-
-        t = slice_df.withColumn("_src", F.lit(1))
-        dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd, allowMissingColumns=True)
-        for c in all_cols:
-            if c not in u.columns:
-                u = u.withColumn(c, F.lit(None).cast("string"))
-        w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-            F.desc("_ingest_seq"), F.desc("_src")
+        max_fb = int(snap.properties.get("max_file_bytes", str(512 << 20)))
+        slice_expr, extra, ks = self._file_slice_expr(
+            bytes_by_bucket,
+            max_fb,
+            min_parallel=self.spark.sparkContext.defaultParallelism if exact else 0,
         )
-        return (
+        buckets = sorted(bytes_by_bucket)
+        tok, ntok = self._placement_expr(buckets, ks) if exact else (None, 0)
+        u = rows.withColumn("bucket", self._bucket_expr(snap)).withColumn(
+            "_slice", slice_expr
+        )
+        if tok is not None:
+            u = u.withColumn("_tok", tok).repartition(ntok, "_tok")
+            groups = ["bucket", "_slice", "_tok"]
+        else:
+            npart = max(1, min(len(buckets) + extra, 2048))
+            u = u.repartition(npart, "bucket", "_slice")
+            groups = ["bucket", "_slice"]
+        # the window's partition columns contain the exchange key, so
+        # Spark keeps the exchange above instead of adding a key shuffle
+        w = Window.partitionBy(*groups, *KEY_COLUMNS).orderBy(*_lww_order())
+        out = (
             u.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(*all_cols)
+            .select(*snap.columns, "bucket")
         )
+        obs = None
+        if tok is not None and extra == 0 and len(buckets) <= 64:
+            obs = Observation()
+            aggs = []
+            for b in buckets:
+                on_b = F.col("bucket") == b
+                aggs += [
+                    F.sum(F.when(on_b, 1).otherwise(0)).alias(f"rows_{b}"),
+                    F.sum(
+                        F.when(on_b & ~F.col("_deleted"), 1).otherwise(0)
+                    ).alias(f"live_{b}"),
+                    F.min(F.when(on_b, F.col("repo"))).alias(f"min_{b}"),
+                    F.max(F.when(on_b, F.col("repo"))).alias(f"max_{b}"),
+                ]
+            out = out.observe(obs, *aggs)
+        out.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(self.root, rel_dir)
+        )
+        mark("merge_write")
+        entries = None
+        if obs is not None:
+            vals = obs.get
+            entries = self._entries_from_stats(
+                rel_dir,
+                {
+                    b: {
+                        "rows": int(vals[f"rows_{b}"] or 0),
+                        "live": int(vals[f"live_{b}"] or 0),
+                        "min_repo": vals[f"min_{b}"],
+                        "max_repo": vals[f"max_{b}"],
+                    }
+                    for b in buckets
+                },
+            )
+        if entries is None:
+            entries = self._scan_written(rel_dir)
+        mark("scan_written")
+        return entries
 
     # ------------------------------------------------------------------ #
     # hot-repo promotion
@@ -1406,7 +1217,7 @@ class LakeTable:
     def _row_bytes_expr(df: DataFrame):
         """Uncompressed payload estimate per row.  Counts EVERY string
         column (not just content): wide promoted ``extra`` columns would
-        otherwise undercount the broadcast decision."""
+        otherwise undercount the file-slicing and small-delta estimates."""
         str_cols = [
             f.name
             for f in df.schema.fields
@@ -1431,7 +1242,7 @@ class LakeTable:
         """Per-bucket (count, bytes) over the staged LWW winners.
 
         Doubles as the delta-key count AND the delta payload size
-        (drives broadcast-vs-shuffle and file slicing); it reads the RAW
+        (drives the small-delta layout and file slicing); it reads the RAW
         stage so the canonicalize pipeline is not re-triggered (raw
         content length ≈ canonical length for sizing purposes).  On the
         big-batch path these numbers ride the stage write as observe
@@ -1801,11 +1612,8 @@ class LakeTable:
                 for e in files_a
                 if e.path in paths_b and set(e.buckets) & touched
             ]
-            # same (seq DESC, batch ASC) order as _resolve: one LWW
-            # semantics across reads, merges, changelog, compaction
-            w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-                F.desc("_ingest_seq"), F.asc("_batch_id")
-            )
+            # one LWW semantics across reads, merges, changelog, compaction
+            w = Window.partitionBy(*KEY_COLUMNS).orderBy(*_lww_order())
 
             def eff(snap, entries):
                 return (
@@ -2166,17 +1974,17 @@ class LakeTable:
         # whole: folding their out-of-set rows would emit those rows as
         # new base rows while the same buckets' old base files are
         # carried — duplicate keys in the base set.  The selected buckets'
-        # rows fold below (delta_filter); the remainder is rewritten as a
+        # rows fold below (``in_sel``); the remainder is rewritten as a
         # single fresh leftover delta file, which also collapses the
         # partial files' pending chain into one file as a side effect.
-        delta_filter = None
+        deltas = self._read_files(snap, sel_delta)
         leftover_entries: list[FileEntry] = []
         if buckets is not None:
             bexpr_old = self._bucket_expr(snap)  # layout unchanged here
             in_sel = bexpr_old.isin(*sorted(set(buckets)))
             partial = [e for e in sel_delta if set(e.buckets) - set(buckets)]
             if partial:
-                delta_filter = in_sel
+                deltas = deltas.filter(in_sel)
                 lrel = os.path.join(
                     "data", f"dleft-{uuid.uuid4().hex[:8]}"
                 )
@@ -2194,65 +2002,22 @@ class LakeTable:
                         os.path.join(self.root, lrel), ignore_errors=True
                     )
                     leftover_entries = []
-        df = self._resolve(
-            snap, sel_base, sel_delta, delta_filter=delta_filter
-        ).withColumn("bucket", self._bucket_expr(new_snap))
-        n_out = (
-            max(1, len({b for e in sel_base + sel_delta for b in e.buckets}))
-            if n_buckets is None
-            else n_buckets + len(new_snap.hot_repos) * new_snap.salt
-        )
-        # bounded file sizes (same contract as the merge write): fat
-        # buckets split into ~max_file_bytes slices.  Under a rescale the
-        # old per-bucket byte map doesn't apply to the NEW layout — slice
-        # uniformly from the total instead (hash layouts spread evenly).
-        max_fb = int(snap.properties.get("max_file_bytes", str(512 << 20)))
+        rows = self._read_files(snap, sel_base).unionByName(deltas)
+        # output buckets and their bytes (file slicing: same contract as
+        # the merge write).  Under a rescale the old per-bucket byte map
+        # doesn't apply to the NEW layout — spread the total evenly over
+        # the new bucket space instead (hash layouts spread evenly).
         total_bytes = sum(e.bytes for e in sel_base + sel_delta)
-        min_par = self.spark.sparkContext.defaultParallelism
         if n_buckets is None:
             bb: dict[int, int] = {}
-            for e in sel_base + sel_delta:
-                share = e.bytes // max(1, len(e.buckets))
-                for b in e.buckets:
-                    bb[b] = bb.get(b, 0) + share
-            slice_expr, extra, cks = self._file_slice_expr(
-                bb, max_fb, min_parallel=min_par
-            )
-            spans = {b for e in sel_base + sel_delta for b in e.buckets}
-            comp_buckets = sorted(
-                spans if buckets is None else spans & set(buckets)
-            )
+            _add_file_bytes(bb, sel_base + sel_delta)
+            if buckets is not None:
+                bb = {b: v for b, v in bb.items() if b in buckets}
         else:
-            k = max(1, -(-total_bytes // (n_out * max_fb)))
-            slice_expr = (
-                F.pmod(F.xxhash64(F.col("path")), F.lit(k)).cast("int")
-                if k > 1
-                else F.lit(0)
-            )
-            extra = n_out * (k - 1)
-            comp_buckets = list(range(n_out))
-            cks = {b: k for b in comp_buckets} if k > 1 else {}
-        # collision-free (bucket, slice) placement for the rewrite
-        # (same rationale as the merge writer: even task waves)
-        tok_expr, tok_npart = self._placement_expr(comp_buckets, cks)
+            out_ids = self._bucket_id_space(new_snap)
+            bb = {b: total_bytes // len(out_ids) for b in out_ids}
         rel_dir = os.path.join("data", f"compact-{uuid.uuid4().hex[:8]}")
-        out = df.withColumn("_slice", slice_expr)
-        if tok_expr is not None:
-            out = (
-                out.withColumn("_tok", tok_expr)
-                .repartition(tok_npart, "_tok")
-                .drop("_tok")
-            )
-        else:
-            out = out.repartition(n_out + extra, "bucket", "_slice")
-        (
-            out.sortWithinPartitions("repo", "path")
-            .drop("_slice")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, rel_dir))
-        )
-        new_entries = self._scan_written(rel_dir)
+        new_entries = self._write_buckets(new_snap, rows, rel_dir, bb)
         new_snap.files = carried + new_entries
         new_snap.delta_files = carried_delta + leftover_entries
         new_snap.op = "compact"

@@ -14,10 +14,30 @@ Design notes (100 TB target, tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+
+
+_SIZE_UNITS = {
+    "": 1, "b": 1,
+    "k": 1 << 10, "kb": 1 << 10,
+    "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30,
+}
+
+
+def conf_bytes(value: str) -> int:
+    """Bytes in a Spark size conf: a bare integer, or an integer with a
+    case-insensitive ``b/k/kb/m/mb/g/gb`` suffix (``'134217728b'``,
+    ``'4mb'``, ``'128M'``).  Binary units, as Spark reads them."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", str(value))
+    unit = m.group(2).lower() if m else None
+    if unit not in _SIZE_UNITS:
+        raise ValueError(f"not a size: {value!r}")
+    return int(m.group(1)) * _SIZE_UNITS[unit]
 
 
 def spark_conf(cores: int | None = None, shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -39,11 +59,10 @@ def spark_conf(cores: int | None = None, shuffle_partitions: int | None = None) 
         "spark.sql.files.maxPartitionBytes": "33554432",
         "spark.hadoop.parquet.block.size": str(16 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "snappy",
-        # the fused single-shuffle merge runs its LWW window over one
-        # (bucket, slice) group per partition — up to ~max_file_bytes of
-        # rows buffered per task.  The 4096-row defaults would spill
-        # every group; raise the in-memory handoff and let the task
-        # memory manager (not a row count) decide when to spill.
+        # a window operator buffers one whole window partition per task;
+        # the 4096-row defaults spill any wide one.  Raise the in-memory
+        # handoff and let the task memory manager (not a row count)
+        # decide when to spill.
         "spark.sql.windowExec.buffer.in.memory.threshold": "32768",
         "spark.sql.windowExec.buffer.spill.threshold": "2097152",
         # deterministic: never infer schemas off sampled data

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark.config import conf_bytes
+
 # ---------------------------------------------------------------------------
 # tokenization / shingling
 # ---------------------------------------------------------------------------
@@ -44,8 +46,8 @@ def spread(df: DataFrame) -> DataFrame:
     files = df.inputFiles()
     if not files:
         return df
-    max_split = int(sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    open_cost = int(sess.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    max_split = conf_bytes(sess.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = conf_bytes(sess.conf.get("spark.sql.files.openCostInBytes", "4m"))
     total = 0
     for uri in files:
         p = uri[len("file:") :] if uri.startswith("file:") else uri

@@ -525,6 +525,17 @@ def read_history() -> list[dict]:
         return [json.loads(ln) for ln in hf if ln.strip()]
 
 
+def gather_note(eff: float, g_ceiling: float) -> str:
+    """The BASELINE.md clause comparing the engine with the machine's
+    random-gather ceiling; empty when the probe measured no gathers."""
+    if g_ceiling <= 0:
+        return ""
+    return f"""; machine random-gather
+(latency/MLP) ceiling {g_ceiling:.3f}
+(engine/gather-ceiling = {min(1.0, eff / g_ceiling):.3f} — the fair
+comparator for the replay's shuffle/sort/hash-bound phases)"""
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=2_400_000)
@@ -688,10 +699,7 @@ per-pair (probe ratio, Mops, clean, order):
 {[(p[3]["ratio"], p[3]["mops"], p[3]["clean"], p[4]) for p in pairs]};
 median of this run's probe-clean pairs {med_clean_pairs}; machine
 pure-compute ceiling this session {ceiling:.3f}
-(engine/ceiling = {min(1.0, eff / ceiling):.3f}); machine random-gather
-(latency/MLP) ceiling {g_ceiling:.3f}
-(engine/gather-ceiling = {min(1.0, eff / g_ceiling):.3f} — the fair
-comparator for the replay's shuffle/sort/hash-bound phases).
+(engine/ceiling = {min(1.0, eff / ceiling):.3f}){gather_note(eff, g_ceiling)}.
 
 Raw JSON:
 ```json

@@ -225,3 +225,13 @@ def test_classify_stamped_run_degraded_by_causal_bandwidth_floor():
     assert {h["stamp"] for h in clean} == {"u0", "u1"}
     assert {h["stamp"] for h in degraded} == {"u2"}
     assert any("bandwidth floor" in r for r in degraded[0]["degraded_reasons"])
+
+
+def test_zero_gather_rate_does_not_divide_by_zero(monkeypatch):
+    from etl_spark import benchref
+
+    monkeypatch.setattr(benchref, "gather_rate", lambda workers, mb=256: 0.0)
+    assert benchref.gather_ceiling(2) == 0.0
+    sb = _load_scaling_bench()
+    assert sb.gather_note(0.7, 0.0) == ""
+    assert "gather-ceiling = 0.875" in sb.gather_note(0.7, 0.8)

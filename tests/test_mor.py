@@ -8,10 +8,12 @@ merge work happens (read-time vs write-time), never the result.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from etl_spark.catalog.table import LakeTable
 from etl_spark.fixtures import events_df
+from etl_spark.oracle import replay_events
 from etl_spark.pipeline import canonicalize
 
 STATE = ["repo", "path", "commit", "lang", "content", "content_sha"]
@@ -21,6 +23,20 @@ def _same_state(a, b):
     x, y = a.select(*STATE), b.select(*STATE)
     assert x.exceptAll(y).count() == 0
     assert y.exceptAll(x).count() == 0
+
+
+def _assert_oracle_state(table, events, promoted=None):
+    cols = STATE + (promoted or [])
+    got = (
+        table.read()
+        .select(*cols)
+        .toPandas()
+        .sort_values(["repo", "path"], kind="mergesort")
+        .reset_index(drop=True)
+    )
+    want = replay_events(events.toPandas(), promoted=promoted)
+    assert len(got) == len(want), f"{len(got)} rows vs oracle {len(want)}"
+    pd.testing.assert_frame_equal(got, want[cols], check_dtype=False)
 
 
 def _batches(spark, n=800, n_batches=4, **kw):
@@ -187,8 +203,8 @@ def test_mor_schema_change_batch_forces_cow_and_folds(spark, tmp_path):
     assert snap.schema_version == 1 and "branch" in snap.columns
     # the forced-CoW evolution batch folded every touched bucket's deltas
     live = mor.read()
-    assert "branch" in live.columns
     assert live.filter(F.col("branch") == "main").count() > 0
+    _assert_oracle_state(mor, with_extra, promoted=["branch"])
 
 
 def test_mor_hot_promotion_batch_forces_cow(spark, tmp_path):
@@ -205,8 +221,13 @@ def test_mor_hot_promotion_batch_forces_cow(spark, tmp_path):
     res = mor.apply_batch(canonicalize(hot), 1)
     assert res["promoted"], "fixture must trigger a promotion"
     assert res["mode"] == "cow", "promotion batch must not use MoR"
+    _assert_oracle_state(mor, cold.unionByName(hot))
     # promoted repo reads correctly through the salted bucket range
-    assert mor.read(repo="repo-hot").count() > 0
+    pruned = mor.read(repo="repo-hot")
+    want = mor.read().filter(F.col("repo") == "repo-hot")
+    assert pruned.count() > 0
+    assert pruned.exceptAll(want).count() == 0
+    assert want.exceptAll(pruned).count() == 0
 
 
 def test_mor_pruned_repo_read_includes_delta_buckets(spark, tmp_path):
@@ -513,30 +534,3 @@ def test_targeted_fold_splits_partial_delta(spark, tmp_path):
     mor.compact()
     assert mor.snapshot().delta_files == []
     assert sorted(map(tuple, mor.read().select(*STATE).collect())) == state
-
-
-def test_expected_rows_hint_is_result_invariant(spark, tmp_path):
-    """The size hint is accepted for caller compatibility and is inert
-    (the overlapped-stats scheduling it once drove was removed after the
-    concurrent-AQE hang): with a hint, a wrong hint, and no hint, the
-    committed state and manifests must be identical."""
-    tables = {}
-    for name, hints in {
-        "nohint": [None, None, None],
-        "hint": [200, 200, 200],
-        "wrong": [1, 10_000_000, 3],
-    }.items():
-        t = LakeTable.create(
-            spark, str(tmp_path / name), n_buckets=4, salt=2,
-            write_mode="auto", mor_compact_ratio=100.0,
-            mor_max_delta_files=1000,
-        )
-        for i, b in enumerate(_batches(spark)):
-            t.apply_batch(canonicalize(b), i, expected_rows=hints[i % 3])
-        tables[name] = t
-    _same_state(tables["nohint"].read(), tables["hint"].read())
-    _same_state(tables["nohint"].read(), tables["wrong"].read())
-    for name in ("hint", "wrong"):
-        assert len(tables[name].snapshot().delta_files) == len(
-            tables["nohint"].snapshot().delta_files
-        )

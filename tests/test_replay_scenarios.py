@@ -183,11 +183,24 @@ def test_unordered_delete_then_late_upsert(spark, tmp_path):
     assert t.read(include_tombstones=True).count() == 1
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_merge_strategies_agree(spark, tmp_path, strategy):
+@pytest.mark.parametrize(
+    "shape, bounds",
+    [
+        # small steady-state deltas over a loaded table
+        ("broadcast", [(0, 600), (600, 650), (650, 700)]),
+        # backfill-sized halves, the first into an empty table
+        ("shuffle", [(0, 350), (350, 700)]),
+    ],
+    ids=["broadcast", "shuffle"],
+)
+def test_merge_strategies_agree(spark, tmp_path, shape, bounds):
+    """The batch shapes the broadcast and shuffle merges were chosen for
+    (small deltas over a loaded table; large ones, the first into an
+    empty table) both go through the one bucket writer and reach the
+    oracle's state."""
     ev = events_df(spark, 700, n_repos=6, paths_per_repo=15)
-    t = LakeTable.create(spark, str(tmp_path / f"lake-{strategy}"), n_buckets=4, salt=2)
-    for b, (lo, hi) in enumerate([(0, 350), (350, 700)]):
+    t = LakeTable.create(spark, str(tmp_path / f"lake-{shape}"), n_buckets=4, salt=2)
+    for b, (lo, hi) in enumerate(bounds):
         chunk = ev.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
-        t.apply_batch(canonicalize(chunk), b, strategy=strategy)
+        t.apply_batch(canonicalize(chunk), b)
     _assert_state_equal(_final_state(t), replay_events(ev.toPandas()))

@@ -17,6 +17,7 @@ from etl_spark.catalog.table import LakeTable
 from etl_spark.fixtures import events_df
 from etl_spark.functions.xxhash import cold_bucket, xxhash64
 from etl_spark.ops import dedup
+from etl_spark.oracle import FINAL_COLUMNS, replay_events, state_digest
 from etl_spark.pipeline import canonicalize
 
 
@@ -210,10 +211,11 @@ def test_placement_tokens_land_exact(spark):
         assert all(got[toks[i]] == i for i in range(n)), n
 
 
-def test_slice_parallelism_floor():
+def test_slice_parallelism_floor(spark):
     """min_parallel slices the largest buckets first and respects the
-    16MB small-file floor."""
-    t = LakeTable.__new__(LakeTable)  # driver-only helper, no session
+    16MB small-file floor.  (Needs the session: the slice expression is
+    built from Column literals.)"""
+    t = LakeTable.__new__(LakeTable)  # driver-only helper, no table
     bb = {0: 100 << 20, 1: 40 << 20, 2: 10 << 20}
     _, extra, ks = LakeTable._file_slice_expr(
         t, bb, max_bytes=512 << 20, min_parallel=6
@@ -229,12 +231,10 @@ def test_slice_parallelism_floor():
     assert ks0 == {} and extra0 == 0
 
 
-def test_fused_merge_matches_legacy(spark, tmp_path, monkeypatch):
-    """The single-shuffle fused merge (exact-placed repartition + window
-    LWW by adjacent keys) produces byte-identical state to the legacy
-    two-shuffle path under out-of-order + duplicated delivery."""
-    import os
-
+def test_bucket_writer_matches_oracle(spark, tmp_path):
+    """The one copy-on-write path (exact-placed repartition + LWW window
+    under the writer's own partitioning) reproduces the serial oracle's
+    state under out-of-order, re-delivered and seq-tied batches."""
     ev = events_df(
         spark, 6000, seed=21, n_repos=10, paths_per_repo=40, hot_pct=20,
         content_bytes=128,
@@ -244,23 +244,11 @@ def test_fused_merge_matches_legacy(spark, tmp_path, monkeypatch):
         ev.filter("seq % 3 = 2").union(ev.limit(300)),  # redelivery
         ev.limit(500),  # pure duplicates incl. seq ties
     ]
-
-    def replay(tag, fused):
-        monkeypatch.setenv("ETL_SPARK_FUSED_MERGE", "1" if fused else "0")
-        monkeypatch.setenv("ETL_SPARK_EXACT_PLACEMENT", "1" if fused else "0")
-        t = LakeTable.create(
-            spark, str(tmp_path / tag), n_buckets=8, salt=4
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8, salt=4)
+    for i, b in enumerate(batches):
+        st = t.apply_batch(
+            b, i, delivery="unordered", canonicalizer=canonicalize
         )
-        for i, b in enumerate(batches):
-            st = t.apply_batch(
-                b, i, delivery="unordered", canonicalizer=canonicalize,
-                strategy="shuffle",
-            )
-            if fused and i > 0:  # first batch has no slice -> plain write
-                assert st.get("strategy") == "shuffle-fused", st
-        return t
-
-    a = replay("fused", True).read()
-    b = replay("legacy", False).read()
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        assert st["mode"] == "cow", st
+    got = t.read().select(*FINAL_COLUMNS).toPandas()
+    assert state_digest(got) == state_digest(replay_events(ev.toPandas()))
